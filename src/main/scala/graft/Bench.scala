@@ -1,6 +1,7 @@
 package graft
 
 import graft.queries.Registry
+import org.apache.spark.metrics.source.CodegenMetrics
 
 /** Benchmark main — runs the headline query set (GQuery.benchmark=true:
   * the heavy scan/join/window/text/dedup representatives) against
@@ -170,6 +171,16 @@ object Bench {
     // once and reports the MIN of the two medians, with both values
     // preserved under "reruns" for the audit trail.
     val reruns = scala.collection.mutable.LinkedHashMap.empty[String, (Double, Double)]
+    // Janino compiles inside the measured query reps and the pipeline
+    // reps (warm-ups excluded), reported as "codegen_compiles": a
+    // codegen-cache regression (Sessions.tune) shows as a count, not
+    // only as time.
+    var codegenCompiles = 0L
+    def countingCompiles[T](body: => T): T = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      try body
+      finally codegenCompiles += CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
     // warm-up, discarded: codegen compiles on run 1, but the fresh JVM
     // keeps tiering up for several more (measured 3.26/0.33/0.24/0.21/
     // 0.17 s for runs 1-5 on an idle machine) — sampling before the
@@ -189,7 +200,7 @@ object Bench {
           System.err.println(s"[bench] ${q.name} FAILED: ${e.getMessage}"); None }
       def median3(): Double = {
         rep() // warm-up, discarded
-        val times = (1 to 3).flatMap(_ => rep())
+        val times = (1 to 3).flatMap(_ => countingCompiles(rep()))
         if (times.nonEmpty) times.sorted.apply(times.size / 2) else -1.0
       }
       val first = median3()
@@ -246,7 +257,7 @@ object Bench {
     // cache lookup, not the pipeline. min-of-2, like the queries.
     val pipelineSecs = (1 to 2).flatMap { _ =>
       val out = java.nio.file.Files.createTempDirectory("graft_bench_pipeline").toString
-      try {
+      try countingCompiles {
         val t0 = System.nanoTime()
         graft.app.Main.run(spark.newSession(), sfDir, out)
         Some((System.nanoTime() - t0) / 1e9)
@@ -264,7 +275,7 @@ object Bench {
         "a loaded sentinel window — treat their times as suspect")
     val contendedJson = contended.map("\"" + _ + "\"").mkString("[", ",", "]")
     val vsPriorJson = vsPrior.map(r => f"$r%.3f").getOrElse("null")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"reruns":$rrs,"pipeline_total":$pipelineTotal,"sentinel":$sent,"sentinel_at":$sentAt,"contended_queries":$contendedJson,"sentinel_min":${f"$sentinelMin%.4f"},"sentinel_vs_prior":$vsPriorJson,"contention":${f"$spread%.3f"},"contention_flag":$loaded,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"reruns":$rrs,"pipeline_total":$pipelineTotal,"sentinel":$sent,"sentinel_at":$sentAt,"contended_queries":$contendedJson,"sentinel_min":${f"$sentinelMin%.4f"},"sentinel_vs_prior":$vsPriorJson,"contention":${f"$spread%.3f"},"contention_flag":$loaded,"sf":"$sfDir","codegen_compiles":$codegenCompiles}""")
     spark.stop()
   }
 }

@@ -42,6 +42,30 @@ object Sessions {
       .config("spark.cleaner.periodicGC.interval",
         sys.env.getOrElse("SPARK_GRAFT_PERIODIC_GC", "30min"))
       .config("spark.ui.enabled", "false")
+      // Generated code compiles once per JVM, not once per session and
+      // sweep. CodeGenerator's JVM-wide cache keys on (classloader,
+      // source) and holds 100 entries by default, while graft's
+      // working set is far larger (distinct generated classes, counted
+      // on the cache keys at sf0.01): one Main.run ~310, the 8
+      // perfbench lake queries ~395, the 31 headline queries ~853 —
+      // ~1.2k for the headline set plus Main.run. At 100 entries an
+      // LRU sweep evicts every class before its next use, so even one
+      // long-lived session recompiled all of them each pass (395 Janino
+      // compiles per lake-query sweep). 2048 leaves headroom; a 31-
+      // query sweep grew Metaspace 171 → 175 MB. Static: it must be
+      // set before the first session builds the shared state.
+      .config("spark.sql.codegen.cache.maxEntries", "2048")
+      // Child sessions (`newSession()`: Bench's and perfbench's
+      // pipeline passes, one per Main.run) each got their own executor
+      // classloader through per-session artifact isolation, so the
+      // cache above missed on every class of a fresh session (~315
+      // compiles plus 16-20 s of JIT CPU per steady Main.run at sf0.01 on
+      // 4 vCPU; the 190 bodies new in a second pass were byte-identical
+      // to their first-pass twins). graft never adds session artifacts
+      // (no addArtifact/addJar), so isolation buys nothing here;
+      // sharing one classloader lets a second Main.run on a fresh
+      // session compile 0-4 classes instead of ~300.
+      .config("spark.sql.artifact.isolation.enabled", "false")
 
   def local(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")): SparkSession = {
     // withExtensions applies only when THIS call creates the session

@@ -97,10 +97,10 @@ object Main {
       val reportRows = branches.flatMap(Await.result(_, Duration.Inf))
       silverLoads.foreach(Await.result(_, Duration.Inf))
       goldLoads.values.foreach(Await.result(_, Duration.Inf))
+      val bad = Validator.violations(reportRows)
       val report = spark.createDataFrame(
         java.util.Arrays.asList(reportRows: _*), Validator.reportSchema)
       Sinks.csv(report, s"$outDir/validation_report")
-      val bad = reportRows.count(_.getAs[Long]("n_bad") != 0L).toLong
       Sinks.jsonReport(Await.result(volumetry, Duration.Inf),
         s"$outDir/volumetry_report.json")
       bad

@@ -46,13 +46,9 @@ object Cleaner {
   def fillStringDefaults(defaults: Map[String, String]): Step = df =>
     df.na.fill(defaults.filter { case (c, _) => has(df, c) })
 
-  /** F16: numeric/boolean fills. */
+  /** F16: numeric fills. */
   def fillNumericDefaults(cols: Seq[String], value: Double = 0.0): Step = df =>
     df.na.fill(value, cols.filter(has(df, _)))
-
-  def fillBooleanDefaults(cols: Seq[String]): Step = df =>
-    cols.filter(has(df, _)).foldLeft(df)((d, c) =>
-      d.withColumn(c, coalesce(col(c).cast("boolean"), lit(false))))
 
   /** F17: truncation per column. */
   def truncate(limits: Map[String, Int]): Step = df =>

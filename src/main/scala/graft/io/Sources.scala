@@ -168,16 +168,6 @@ object Ingest {
     df.select(keep.map(col).toSeq: _*)
   }
 
-  /** S5 null defaulting by type: strings→"", numerics→0, booleans→false
-    * (extractor_polymarket.py:176-183). */
-  def fillWriteDefaults(df: DataFrame): DataFrame = {
-    val strings = df.schema.collect { case StructField(n, StringType, _, _) => n }
-    val nums = df.schema.collect {
-      case StructField(n, LongType | IntegerType | DoubleType | FloatType, _, _) => n }
-    val bools = df.schema.collect { case StructField(n, BooleanType, _, _) => n }
-    df.na.fill("", strings).na.fill(0, nums).na.fill(false, bools)
-  }
-
   /** S4 bronze-compat mode: nested columns serialized to JSON strings
     * (the preferred path keeps them typed; this exists for parity). */
   def nestedToJsonStrings(df: DataFrame): DataFrame =

@@ -405,13 +405,25 @@ object Validator {
 
   /** The report's (check_name: string, n_bad: long) output schema —
     * for orchestrators that rebuild the report frame from collected
-    * branch rows. */
+    * branch rows. Both columns are non-null: every counter is a count.
+    * Pinned to `report(...).schema` by a spec. */
   val reportSchema: org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("check_name",
         org.apache.spark.sql.types.StringType, nullable = false),
       org.apache.spark.sql.types.StructField("n_bad",
-        org.apache.spark.sql.types.LongType, nullable = true)))
+        org.apache.spark.sql.types.LongType, nullable = false)))
+
+  /** Number of failed checks among collected report rows. A null
+    * `n_bad` throws: it means a broken check, and unboxing it to 0
+    * would count it as a pass. */
+  def violations(rows: Seq[org.apache.spark.sql.Row]): Long =
+    rows.count { r =>
+      val i = r.fieldIndex("n_bad")
+      if (r.isNullAt(i)) throw new IllegalStateException(
+        s"validation check ${r.getAs[String]("check_name")} returned a null n_bad")
+      r.getLong(i) != 0L
+    }.toLong
 
   /** [[report]] decomposed into independent branches, each tagged with
     * the gold tables it reads — so an orchestrator can START each

@@ -5,12 +5,12 @@ import org.apache.spark.sql.catalyst.plans.logical._
 /** Plan audit for the benchmark set: a `Window` with an empty
   * partition spec moves EVERY row to one partition — the classic
   * accidentally-serial operator that works at sf0.1 and falls over at
-  * 100 TB. Two global windows are known-bounded by construction and
-  * must not hide new unbounded ones behind their (benign) WindowExec
-  * warnings in the bench log:
+  * 100 TB. Two global-window shapes are known-bounded by construction
+  * and must not hide new unbounded ones behind their (benign)
+  * WindowExec warnings in the bench log:
   *
-  *  - the SetSimilarity dense-path vocabulary index — a row_number
-  *    over `distinct(explode(tokens))`, gate-bounded to ≤ 62 rows;
+  *  - a vocabulary index — a row_number over `distinct(explode(tokens))`,
+  *    bounded by the vocabulary size;
   *  - q122's cumulative-share window, which runs after a limit(1000).
   *
   * The benign patterns are recognized STRUCTURALLY (input is an
@@ -60,18 +60,18 @@ class GlobalWindowAuditSpec extends SparkTestBase {
     }
     assert(offenders.isEmpty,
       s"unbounded global windows in benchmark plans:\n${offenders.mkString("\n")}")
-    // NOTE: q144's dense-path vocabulary window used to be this test's
-    // vacuity witness; since r9 it sits below the set-table
-    // localCheckpoint (like q181/q189's checkpointed frames) and is
-    // invisible to a logical-plan walk. The detector's non-vacuity is
-    // carried by the three synthetic probes below instead.
+    // No benchmark plan shows this walk a benign global window (frames
+    // below a localCheckpoint are invisible to it), so the detector's
+    // non-vacuity is carried by the synthetic probes below.
   }
 
-  test("the vocab window inside the dense set-similarity path is seen when audited pre-checkpoint") {
+  test("a vocab-index window over an exploded token set is classified benign") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    // rebuild the vocab-index shape denseBands uses, sans checkpoint:
-    // the walker must classify it benign (aggregate-over-generator)
+    // synthetic probe, not a mirror of any query: a global row_number
+    // over the distinct words of exploded token arrays is bounded by the
+    // vocabulary, and the walker must classify it benign
+    // (aggregate-over-generator)
     val toks = Tables.documents(spark, sf)
       .select($"doc_id", array_distinct(graft.functions.TextAnalysis.tokens($"text")).as("t"))
       .where(size($"t") > 0)

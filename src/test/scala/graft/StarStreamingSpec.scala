@@ -13,6 +13,19 @@ class StarStreamingSpec extends SparkTestBase {
     assert(bad.isEmpty, s"integrity violations: ${bad.mkString(",")}")
   }
 
+  test("Validator.reportSchema is the schema Validator.report produces") {
+    assert(Validator.report(StarSchema.build(spark, sf)).schema == Validator.reportSchema)
+  }
+
+  test("a null n_bad fails loudly instead of counting as a pass") {
+    import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
+    def row(n: java.lang.Long) =
+      new GenericRowWithSchema(Array[Any]("uniq_dim_tag", n), Validator.reportSchema)
+    assert(Validator.violations(Seq(row(0L), row(3L), row(0L))) == 1L)
+    val e = intercept[IllegalStateException](Validator.violations(Seq(row(0L), row(null))))
+    assert(e.getMessage.contains("uniq_dim_tag"))
+  }
+
   test("surrogate keys are deterministic across builds") {
     val a = StarSchema.build(spark, sf)("dim_customer").select("c_custkey", "customer_sk")
     val b = StarSchema.build(spark, sf)("dim_customer").select("c_custkey", "customer_sk")
